@@ -61,17 +61,6 @@ def current_snapshot(
     return packed.select(key, *[F.col(f"_row.{c}").alias(c) for c in others])
 
 
-def reopen_after_rollback(
-    updates: DataFrame, rollback_block_uid: int, key: str = "asset_id", uid: str = "uid"
-) -> DataFrame:
-    """T3 repair (mod.rs:824-858): drop rows from rolled-back blocks, then
-    re-derive chains — the lowest surviving row per key regains MAX_UID
-    automatically (the reference reopens it with an UPDATE; A6 min-per-group).
-    """
-    survivors = updates.filter(F.col("block_uid") <= F.lit(rollback_block_uid))
-    return chain_superseded_by(survivors.drop("superseded_by"), key=key, uid=uid)
-
-
 def table_diff(
     before: DataFrame,
     after: DataFrame,

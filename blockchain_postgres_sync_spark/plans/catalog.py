@@ -42,7 +42,7 @@ from ..operators.candles import (
 )
 from ..operators.scd import chain_superseded_by, current_snapshot
 from ..operators.uids import assign_uids
-from ..streaming.reorg import rollback_scd, squash_microblocks
+from ..streaming.reorg import squash_microblocks
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1110,7 +1110,8 @@ def q_rollback_scd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_id = ev.agg(F.max("uid")).collect()[0][0]
     boundary = (int(max_id) // 10) * 7 // 10
-    return rollback_scd(ev, boundary).select(
+    survivors = ev.filter(F.col("block_uid") <= boundary)
+    return chain_superseded_by(survivors, key="asset_id", uid="uid").select(
         "asset_id", "uid", "block_uid", "superseded_by"
     )
 

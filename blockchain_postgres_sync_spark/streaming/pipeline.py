@@ -29,7 +29,6 @@ reorg depth, not dimension size.
 from __future__ import annotations
 
 import datetime as _dt
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -70,6 +69,18 @@ CANDLE_TABLES = ["candles_1m"] + [f"candles_{dst}" for _, dst in CANDLE_CASCADE]
 HEIGHT_BUCKET = 1000
 
 
+#: session confs for one trigger's plans (see _micro_batch_confs)
+_MICRO_BATCH_CONFS = {
+    "spark.sql.shuffle.partitions": "4",
+    "spark.sql.adaptive.coalescePartitions.minPartitionNum": "1",
+    # AQE materializes EVERY exchange/broadcast of a plan as its own Spark
+    # job; on micro-batch plans (dozens of tiny exchanges per trigger) that
+    # job-per-stage floor IS the wall clock, while the runtime
+    # re-optimization it buys is worthless at a few thousand rows.
+    "spark.sql.adaptive.enabled": "false",
+}
+
+
 @contextmanager
 def _micro_batch_confs(spark: SparkSession):
     """Size shuffle width by MICRO-BATCH volume, not session/cluster width,
@@ -82,30 +93,15 @@ def _micro_batch_confs(spark: SparkSession):
     here).  At 32 cores every per-batch join/window/write stage ran 32+
     tiny tasks and every AQE broadcast subtree 33-66 — measured 217 jobs /
     ~49 s of job time per 5-trigger run, almost all scheduler floor (guide
-    §2.2: partition count must follow data volume).  Width is env-tunable
-    (``SPARK_GRAFT_STREAM_SHUFFLE``): raise it on deployments whose
-    triggers carry millions of rows; everything here is AQE-coalesced, so
-    an over-wide setting only costs scheduling, never correctness.
-    Restored in ``finally`` so interleaved batch queries on the same
-    session keep the session values.
+    §2.2: partition count must follow data volume).  The values are fixed
+    (``_MICRO_BATCH_CONFS``): in an interleaved A/B, width 4 beat width 32
+    and AQE off beat AQE on (OPTIMIZATION_r11.md).  Restored in
+    ``finally`` so interleaved batch queries on the same session keep the
+    session values.
     """
     conf = spark.conf
-    width = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4")
-    floor = os.environ.get("SPARK_GRAFT_STREAM_MIN_COALESCED", "1")
-    aqe = os.environ.get("SPARK_GRAFT_STREAM_AQE", "false")
-    wanted = {
-        "spark.sql.shuffle.partitions": width,
-        "spark.sql.adaptive.coalescePartitions.minPartitionNum": floor,
-        # AQE materializes EVERY exchange/broadcast of a plan as its own
-        # Spark job; on micro-batch plans (dozens of tiny exchanges per
-        # trigger) that job-per-stage floor IS the wall clock, while the
-        # runtime re-optimization it buys is worthless at a few thousand
-        # rows.  Off by default for the trigger's plans only (env-tunable
-        # for deployments with corpus-sized triggers).
-        "spark.sql.adaptive.enabled": aqe,
-    }
     old: dict[str, str | None] = {}
-    for k, v in wanted.items():
+    for k, v in _MICRO_BATCH_CONFS.items():
         try:
             old[k] = conf.get(k)
         except Exception:  # noqa: BLE001 — unset key
@@ -162,6 +158,29 @@ def _run_parallel(tasks, max_workers: int = 8) -> None:
 def _read_or_empty(store: TableStore, name: str, like: DataFrame) -> DataFrame:
     existing = store.read_or_none(name)
     return existing if existing is not None else _empty(store.spark, like)
+
+
+def _rechain(
+    stored_chain: DataFrame | None, log: DataFrame, affected: DataFrame
+) -> DataFrame:
+    """The SCD chain (W1) of ``log``, rechaining only the ``affected`` keys.
+
+    Chains are per-key independent, so a key whose log rows did not change
+    keeps its stored chain rows; they pass through a broadcast anti-join and
+    only the affected keys' log rows re-derive ``superseded_by``.  This is
+    the appends path (keys with new updates, the UNNEST close join J6,
+    pg.rs:225-256) and the rollback reopen repair (keys with deleted rows,
+    the DELETE .. RETURNING feed, mod.rs:824-858) alike, so the cost follows
+    batch size or reorg depth, not dimension size.  With no stored chain
+    the whole log chains."""
+    if stored_chain is None:
+        return chain_superseded_by(log, key="asset_id", uid="uid")
+    unchanged = stored_chain.join(F.broadcast(affected), "asset_id", "left_anti")
+    rechained = chain_superseded_by(
+        log.join(F.broadcast(affected), "asset_id", "left_semi"),
+        key="asset_id", uid="uid",
+    )
+    return unchanged.unionByName(rechained)
 
 
 # ------------------------------------------------------------ squash (T2)
@@ -255,15 +274,10 @@ def _apply_squash_fast(
     return new_blocks, new_tables
 
 
-#: sentinel: "caller did not precompute last_key — derive it with a job"
-_DERIVE = object()
-
-
 def normalize_squash(
     blocks: DataFrame,
     tx_tables: dict[str, DataFrame],
     settled_below: int | None = None,
-    last_key: int | None | object = _DERIVE,
 ) -> tuple[DataFrame, dict[str, DataFrame]]:
     """Wholesale microblock-tail normalization.
 
@@ -280,15 +294,8 @@ def normalize_squash(
     again), so the only unpartitioned window sorts the speculative tail +
     this batch's rows, never O(history).  Tail rows preceding any new key
     block anchor to ``settled_below`` itself, which can therefore still
-    absorb folded ids.
-
-    ``last_key`` — the max key-block (time_stamp NOT NULL) uid in the
-    tail, or None when the tail has no key block — may be passed in when
-    the caller already knows it (apply_appends folds it into its single
-    batch-metadata job: every stored key block has uid <= settled_below
-    by construction, so the tail's max key uid is the max key uid among
-    the NEW blocks).  Left at the default, it is derived here with one
-    driver job, exactly as before.
+    absorb folded ids.  The tail's last key block is found with one driver
+    job; a tail without a key block is returned unchanged.
     """
     if settled_below is None:
         head = blocks.filter(F.lit(False))
@@ -304,10 +311,9 @@ def normalize_squash(
             F.lit(settled_below).cast("long"),
         ),
     )
-    if last_key is _DERIVE:
-        last_key = tail.filter(F.col("time_stamp").isNotNull()).agg(
-            F.max("uid")
-        ).collect()[0][0]
+    last_key = tail.filter(F.col("time_stamp").isNotNull()).agg(
+        F.max("uid")
+    ).collect()[0][0]
     if last_key is None:
         return blocks, tx_tables
 
@@ -342,7 +348,7 @@ def normalize_squash(
 # ------------------------------------------------------------ candles (A4)
 
 
-def _interval_starts(spark: SparkSession, since_ts: _dt.datetime) -> dict[str, _dt.datetime]:
+def _interval_starts(since_ts: _dt.datetime) -> dict[str, _dt.datetime]:
     """Truncate the watermark to every interval's start (per-interval start,
     pg.rs:776-803) — pure driver-side datetime math, no Spark job.
 
@@ -401,7 +407,7 @@ def recompute_candles(
     rollback/startup paths).
     """
     spark = store.spark
-    starts = _interval_starts(spark, since_ts)
+    starts = _interval_starts(since_ts)
 
     if asset_updates is None:
         asset_updates = store.read_or_none("asset_updates")
@@ -684,33 +690,23 @@ def apply_appends(
         new_ids = id_frames[0]
         for f in id_frames[1:]:
             new_ids = new_ids.unionByName(f)
-    # SCD logs: asset updates + tickers.  Chains are per-key independent, so
-    # only keys with updates in THIS batch rechain (W1 + the UNNEST close
-    # join J6, pg.rs:225-256); untouched keys' chain rows pass through — at
-    # scale the rechain cost follows batch size, not dimension size.
-    # batch-content flags (which slowly-changing inputs does this segment
-    # actually carry?) ride the consolidated metadata job above
+    # SCD logs: asset updates + tickers.  Only keys with updates in THIS
+    # batch rechain (_rechain).  batch-content flags (which slowly-changing
+    # inputs does this segment actually carry?) ride the consolidated
+    # metadata job above
     flags = meta_row
 
-    def _scd(log_name: str, chained_name: str, new_rows: DataFrame, has_new: bool) -> None:
+    def _scd(
+        log_name: str, chained_name: str, new_rows: DataFrame, has_new: bool
+    ) -> tuple[DataFrame, DataFrame] | None:
+        """(log, chained) after this batch, or None when the batch carries
+        no updates for the log: both stored tables are then already current
+        — restaging would rewrite full history per batch for nothing."""
         if store.exists(log_name) and not has_new:
-            # no updates this batch: both the log and the chained table are
-            # already current — restaging would rewrite full history per
-            # batch for nothing
-            return
+            return None
         log = _read_or_empty(store, log_name, new_rows).unionByName(new_rows)
-        store.stage(log_name, log)
-        stored_chain = store.read_or_none(chained_name)
-        if stored_chain is None:
-            store.stage(chained_name, chain_superseded_by(log, key="asset_id", uid="uid"))
-            return
         affected = new_rows.select("asset_id").distinct()
-        unchanged = stored_chain.join(F.broadcast(affected), "asset_id", "left_anti")
-        rechained = chain_superseded_by(
-            log.join(F.broadcast(affected), "asset_id", "left_semi"),
-            key="asset_id", uid="uid",
-        )
-        store.stage(chained_name, unchanged.unionByName(rechained))
+        return log, _rechain(store.read_or_none(chained_name), log, affected)
 
     new_au = extract_asset_updates(seg_updates)
     new_tick = extract_ticker_updates(seg_updates, asset_storage_address)
@@ -719,31 +715,14 @@ def apply_appends(
 
     # ---- asset SCD frames, built DRIVER-SIDE before the write wave (the
     # candle task consumes the chained frame, so it cannot live inside a
-    # sibling task like the ticker/waves legs do).  Mirrors _scd exactly.
-    au_skip = store.exists("asset_updates_log") and not bool(flags["has_au"])
+    # sibling task like the ticker/waves legs do)
+    au = _scd("asset_updates_log", "asset_updates", new_au, bool(flags["has_au"]))
     au_tasks: list = []
-    if au_skip:
+    if au is None:
         au_log_final = store.read_or_none("asset_updates_log")
         au_chained = store.read_or_none("asset_updates")
     else:
-        au_log_final = _read_or_empty(
-            store, "asset_updates_log", new_au
-        ).unionByName(new_au)
-        stored_chain = store.read_or_none("asset_updates")
-        if stored_chain is None:
-            au_chained = chain_superseded_by(
-                au_log_final, key="asset_id", uid="uid"
-            )
-        else:
-            affected = new_au.select("asset_id").distinct()
-            unchanged = stored_chain.join(
-                F.broadcast(affected), "asset_id", "left_anti"
-            )
-            rechained = chain_superseded_by(
-                au_log_final.join(F.broadcast(affected), "asset_id", "left_semi"),
-                key="asset_id", uid="uid",
-            )
-            au_chained = unchanged.unionByName(rechained)
+        au_log_final, au_chained = au
         au_tasks = [
             lambda: store.stage("asset_updates_log", au_log_final),
             lambda: store.stage("asset_updates", au_chained),
@@ -778,10 +757,13 @@ def apply_appends(
             store.stage("asset_origins", extract_asset_origins(au_log_final, txs3))
 
     def _tickers() -> None:
-        _scd(
+        tick = _scd(
             "asset_tickers_log", "asset_tickers", new_tick,
             bool(flags["has_de"]),
         )
+        if tick is not None:
+            store.stage("asset_tickers_log", tick[0])
+            store.stage("asset_tickers", tick[1])
 
     def _waves() -> None:
         # waves_data: dedupe on quantity (S6); skip the full-history
@@ -905,27 +887,13 @@ def rollback_to_uid(store: TableStore, boundary: int) -> _dt.datetime | None:
             continue
         survivors = log.filter(F.col("block_uid") <= boundary)
         store.stage(log_name, survivors)
-        # affected-keys-only rechain, mirroring the appends path (_scd):
-        # chains are per-key independent, and a key none of whose rows are
-        # deleted keeps an identical per-key log — its stored chain rows
-        # pass through untouched.  Only keys with rows ABOVE the boundary
-        # (the reference's DELETE .. RETURNING feed, pg.rs:225-256) rechain,
-        # so rollback cost follows reorg depth, not dimension size.
-        stored_chain = store.read_or_none(chained)
-        if stored_chain is None:
-            store.stage(
-                chained, chain_superseded_by(survivors, key="asset_id", uid="uid")
-            )
-            continue
+        # only keys with rows ABOVE the boundary rechain (reopen repair)
         affected = (
             log.filter(F.col("block_uid") > boundary).select("asset_id").distinct()
         )
-        unchanged = stored_chain.join(F.broadcast(affected), "asset_id", "left_anti")
-        rechained = chain_superseded_by(
-            survivors.join(F.broadcast(affected), "asset_id", "left_semi"),
-            key="asset_id", uid="uid",
+        store.stage(
+            chained, _rechain(store.read_or_none(chained), survivors, affected)
         )
-        store.stage(chained, unchanged.unionByName(rechained))
 
     wd = store.read_or_none("waves_data")
     if wd is not None:
@@ -967,38 +935,32 @@ def startup_rollback(
     if blocks is None:
         return None
     with _micro_batch_confs(store.spark):
-        return _startup_rollback_inner(store, blocks, depth, step)
-
-
-def _startup_rollback_inner(
-    store: TableStore, blocks: DataFrame, depth: int, step: int
-) -> int | None:
-    cur_row = blocks.agg(F.max("height")).collect()[0][0]
-    if cur_row is None:
-        return None
-    current = int(cur_row)
-    step = min(step, depth)
-    starting = max(current - step, 0)
-    final = max(current - depth, 0)
-    heights = list(range(starting, final, -step))
-    heights.append(final)
-    ladder = (
-        blocks.filter(F.col("height").isin(heights))
-        .select("uid", "height")
-        .orderBy(F.desc("uid"))
-        .collect()
-    )
-    if not ladder:
-        return None
-    watermark: _dt.datetime | None = None
-    for rung in ladder:
-        wm = rollback_to_uid(store, rung["uid"])
-        if wm is not None:
-            watermark = wm if watermark is None else min(watermark, wm)
-    if watermark is not None:
-        recompute_candles(store, watermark)
-    store.commit()
-    return int(ladder[-1]["height"]) + 1
+        cur_row = blocks.agg(F.max("height")).collect()[0][0]
+        if cur_row is None:
+            return None
+        current = int(cur_row)
+        step = min(step, depth)
+        starting = max(current - step, 0)
+        final = max(current - depth, 0)
+        heights = list(range(starting, final, -step))
+        heights.append(final)
+        ladder = (
+            blocks.filter(F.col("height").isin(heights))
+            .select("uid", "height")
+            .orderBy(F.desc("uid"))
+            .collect()
+        )
+        if not ladder:
+            return None
+        watermark: _dt.datetime | None = None
+        for rung in ladder:
+            wm = rollback_to_uid(store, rung["uid"])
+            if wm is not None:
+                watermark = wm if watermark is None else min(watermark, wm)
+        if watermark is not None:
+            recompute_candles(store, watermark)
+        store.commit()
+        return int(ladder[-1]["height"]) + 1
 
 
 # ------------------------------------------------------------ batch driver
@@ -1019,61 +981,59 @@ def process_batch(
     # payload (guide §5 caching: reused + expensive to recompute).  The
     # batch is micro by construction, so the cache is bounded; released
     # in the finally below.
-    ctx = _micro_batch_confs(store.spark)
-    ctx.__enter__()
-    batch_df = batch_df.persist()
-    try:
-        # driver-side sort: an orderBy on the micro-batch plans a range
-        # partitioner (its own sampling job); the segment list is tiny by
-        # construction, so sort the collected rows in Python instead
-        meta = sorted(
-            batch_df.select("seq", "kind", "ref_id").collect(),
-            key=lambda m: m["seq"],
-        )
-        if not meta:
-            return
-        segments: list[tuple[str, int, int] | tuple[str, str]] = []
-        run_start = None
-        for m in meta:
-            if m["kind"] in ("block", "microblock"):
-                if run_start is None:
-                    run_start = m["seq"]
-                run_end = m["seq"]
-            else:  # rollback closes any open run
-                if run_start is not None:
-                    segments.append(("appends", run_start, run_end))
-                    run_start = None
-                segments.append(("rollback", m["ref_id"]))
-        if run_start is not None:
-            segments.append(("appends", run_start, run_end))
-
+    with _micro_batch_confs(store.spark):
+        batch_df = batch_df.persist()
         try:
-            for seg in segments:
-                if seg[0] == "appends":
-                    _, lo, hi = seg
-                    # candles recompute inside apply_appends' write wave
-                    apply_appends(
-                        store,
-                        batch_df.filter(
-                            (F.col("seq") >= lo) & (F.col("seq") <= hi)
-                        ),
-                        asset_storage_address,
-                        chain_id=chain_id,
-                    )
-                else:
-                    watermark = apply_rollback(store, seg[1])
-                    if watermark is not None:
-                        recompute_candles(store, watermark)
-            store.commit()
-        except BaseException:
-            # leave no staged state behind: the store instance is reused
-            # across triggers (frame memo), so a failed batch must not
-            # bleed its staged versions into the retry
-            store.rollback_staged()
-            raise
-    finally:
-        batch_df.unpersist()
-        ctx.__exit__(None, None, None)
+            # driver-side sort: an orderBy on the micro-batch plans a range
+            # partitioner (its own sampling job); the segment list is tiny by
+            # construction, so sort the collected rows in Python instead
+            meta = sorted(
+                batch_df.select("seq", "kind", "ref_id").collect(),
+                key=lambda m: m["seq"],
+            )
+            if not meta:
+                return
+            segments: list[tuple[str, int, int] | tuple[str, str]] = []
+            run_start = None
+            for m in meta:
+                if m["kind"] in ("block", "microblock"):
+                    if run_start is None:
+                        run_start = m["seq"]
+                    run_end = m["seq"]
+                else:  # rollback closes any open run
+                    if run_start is not None:
+                        segments.append(("appends", run_start, run_end))
+                        run_start = None
+                    segments.append(("rollback", m["ref_id"]))
+            if run_start is not None:
+                segments.append(("appends", run_start, run_end))
+
+            try:
+                for seg in segments:
+                    if seg[0] == "appends":
+                        _, lo, hi = seg
+                        # candles recompute inside apply_appends' write wave
+                        apply_appends(
+                            store,
+                            batch_df.filter(
+                                (F.col("seq") >= lo) & (F.col("seq") <= hi)
+                            ),
+                            asset_storage_address,
+                            chain_id=chain_id,
+                        )
+                    else:
+                        watermark = apply_rollback(store, seg[1])
+                        if watermark is not None:
+                            recompute_candles(store, watermark)
+                store.commit()
+            except BaseException:
+                # leave no staged state behind: the store instance is reused
+                # across triggers (frame memo), so a failed batch must not
+                # bleed its staged versions into the retry
+                store.rollback_staged()
+                raise
+        finally:
+            batch_df.unpersist()
 
 
 def run_stream(

@@ -1,33 +1,23 @@
-"""Reorg semantics: microblock squash (T2) and rollback (T3) as pure
-DataFrame recomputations — the append-only translation of the reference's
-in-place UPDATE/DELETE transactions.
+"""Microblock squash on key-block arrival (T2) as a pure DataFrame
+recomputation — the append-only translation of the reference's in-place
+UPDATE/DELETE transaction.
 
-Reference behavior:
-- squash (mod.rs:769-792): when a key block arrives, all pending microblocks
-  fold into the previous key block — their rows' block_uid re-points to the
-  key block uid (pg.rs:216-223, 315-322, 383-390), microblock rows are
-  deleted (pg.rs:160-166), and the key block takes the last total-block id
-  (pg.rs:151-158).
-- rollback (mod.rs:794-863): delete everything above the target block uid,
-  reopen the SCD chains (lowest deleted uid per key regains MAX_UID,
-  mod.rs:824-858), recompute candles from the first affected minute
-  (pg.rs:817-838).
+Reference behavior (mod.rs:769-792): when a key block arrives, all pending
+microblocks fold into the previous key block — their rows' block_uid
+re-points to the key block uid (pg.rs:216-223, 315-322, 383-390), microblock
+rows are deleted (pg.rs:160-166), and the key block takes the last
+total-block id (pg.rs:151-158).
 
-Here both are functions: (tables, boundary) -> new tables.  Deletes are
-anti-filters; the SCD "reopen repair" is free because superseded_by is
-re-derived from surviving rows (operators.scd.chain_superseded_by); candle
-repair reuses the incremental recompute (operators.candles, A4 watermark).
-At scale these rewrites touch only the speculative tail: blocks/txs are
-partitioned by height bucket, and a reorg deeper than a few blocks cannot
-occur, so the rewritten partition set is O(1).
+This single-step form backs the catalog's ``squash_*`` queries.  The
+streaming pipeline normalizes its whole speculative tail instead
+(streaming/pipeline.py::normalize_squash), and rollback with the SCD reopen
+repair lives there too (pipeline.rollback_to_uid).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.scd import chain_superseded_by
 
 
 def squash_microblocks(
@@ -75,25 +65,3 @@ def squash_microblocks(
         }
     return new_blocks, new_tables
 
-
-def rollback_block_uid(blocks: DataFrame, block_id: str) -> int | None:
-    """Resolve a rollback target id to its block uid (mod.rs:794-822)."""
-    row = blocks.filter(F.col("id") == block_id).select("uid").collect()
-    return row[0]["uid"] if row else None
-
-
-def rollback_tables(
-    tables: dict[str, DataFrame], boundary_uid: int, uid_col: str = "block_uid"
-) -> dict[str, DataFrame]:
-    """T3 delete phase (S7): keep rows at or below the boundary uid."""
-    return {n: df.filter(F.col(uid_col) <= boundary_uid) for n, df in tables.items()}
-
-
-def rollback_scd(updates: DataFrame, boundary_uid: int, key: str = "asset_id") -> DataFrame:
-    """T3 repair phase (mod.rs:824-858): recompute the chain from surviving
-    rows — the reference's 'reopen lowest deleted uid per key' UPDATE is
-    implied by re-derivation (A6 min-per-group becomes unnecessary)."""
-    survivors = updates.filter(F.col("block_uid") <= boundary_uid)
-    if "superseded_by" in survivors.columns:
-        survivors = survivors.drop("superseded_by")
-    return chain_superseded_by(survivors, key=key, uid="uid")

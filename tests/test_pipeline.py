@@ -358,7 +358,7 @@ def test_interval_starts_match_trunc_ts(spark):
         dt.datetime(2023, 7, 16, 11, 30, 1),  # a Sunday
     ]
     for ts in samples:
-        got = _interval_starts(spark, ts)
+        got = _interval_starts(ts)
         lit = F.lit(ts).cast("timestamp")
         row = spark.range(1).select(
             *[trunc_ts(lit, ivl).alias(f"i_{i}") for i, ivl in enumerate(ALL_INTERVALS)]
@@ -550,3 +550,187 @@ def test_store_compact_null_partition(spark, tmp_path):
     assert len(null_files()) == 1
     after_rows = sorted((r["id"], r["p"]) for r in store.read("t").collect())
     assert after_rows == before_rows  # every NULL row survived
+
+
+def _canon(df):
+    """Order- and column-order-insensitive content of a frame."""
+    return sorted(tuple(sorted(r.asDict().items())) for r in df.collect())
+
+
+def _squash_inputs(spark, shape, settled_below):
+    """Blocks from ``shape`` ("K" key block, "m" microblock; uid = position
+    + 1), two block_uid-bearing tx tables, and the collected speculative
+    tail (uid > settled_below) as apply_appends hands it to the squash."""
+    import datetime as dt
+
+    rows = [
+        (uid, f"b{uid}", uid, dt.datetime(2024, 1, 1) + dt.timedelta(minutes=uid)
+         if kind == "K" else None)
+        for uid, kind in enumerate(shape, start=1)
+    ]
+    blocks = spark.createDataFrame(
+        rows, "uid long, id string, height int, time_stamp timestamp"
+    )
+    tx_schema = "id string, uid long, block_uid long"
+    tx_tables = {
+        "txs_a": spark.createDataFrame(
+            [(f"a{u}", 100 + u, u) for u, *_ in rows], tx_schema
+        ),
+        "txs_b": spark.createDataFrame(
+            [(f"b{u}", 200 + u, u) for u, *_ in rows if u % 2 == 0], tx_schema
+        ),
+    }
+    tail_rows = sorted(
+        (uid, bid, ts is not None)
+        for uid, bid, _h, ts in rows
+        if settled_below is None or uid > settled_below
+    )
+    return blocks, tx_tables, tail_rows
+
+
+@pytest.mark.parametrize(
+    "shape,settled_below",
+    [
+        ("mm", None),              # no key block at all
+        ("KKKmm", 3),              # tail above a stored key has no key block
+        ("KmmKmm", None),          # micros before and after the last key
+        ("mKmKm", None),           # micros before the first key stay put
+        ("KKKmmKmKmm", 3),         # tail anchored to the stored key uid
+    ],
+)
+def test_squash_fast_matches_normalize_squash(spark, monkeypatch, shape, settled_below):
+    """The collected-tail squash must equal the distributed window form it
+    falls back to past _SQUASH_TAIL_CAP rows: same blocks, same re-pointed
+    block_uids."""
+    from blockchain_postgres_sync_spark.streaming import pipeline as P
+
+    blocks, tx_tables, tail_rows = _squash_inputs(spark, shape, settled_below)
+    fast_blocks, fast_tx = P._apply_squash_fast(
+        blocks, tx_tables, tail_rows, settled_below
+    )
+    ref_blocks, ref_tx = P.normalize_squash(
+        blocks, tx_tables, settled_below=settled_below
+    )
+    assert _canon(fast_blocks) == _canon(ref_blocks)
+    assert fast_tx.keys() == ref_tx.keys()
+    for name in fast_tx:
+        assert _canon(fast_tx[name]) == _canon(ref_tx[name]), name
+
+    # past the cap, _apply_squash_fast dispatches to normalize_squash
+    monkeypatch.setattr(P, "_SQUASH_TAIL_CAP", 0)
+    cap_blocks, _ = P._apply_squash_fast(blocks, tx_tables, tail_rows, settled_below)
+    assert _canon(cap_blocks) == _canon(ref_blocks)
+
+    if shape == "KKKmmKmKmm":
+        # 4,5 fold into the stored key 3; 7 into 6; 9,10 are the live tail
+        assert {r["uid"]: r["id"] for r in fast_blocks.collect()} == {
+            1: "b1", 2: "b2", 3: "b5", 6: "b7", 8: "b8", 9: "b9", 10: "b10",
+        }
+        repointed = {r["id"]: r["block_uid"] for r in fast_tx["txs_a"].collect()}
+        assert (repointed["a4"], repointed["a5"], repointed["a7"]) == (3, 3, 6)
+        assert (repointed["a9"], repointed["a10"]) == (9, 10)
+
+
+def test_rechain_affected_keys_equals_full_chain(spark):
+    """Rechaining only the affected keys over a stored chain must equal a
+    full chain_superseded_by of the new log — after an append and after a
+    rollback."""
+    from blockchain_postgres_sync_spark.operators.scd import chain_superseded_by
+    from blockchain_postgres_sync_spark.streaming.pipeline import _rechain
+
+    schema = "asset_id string, uid long, block_uid long"
+
+    def chain(df):
+        return chain_superseded_by(df, key="asset_id", uid="uid")
+
+    def affected(df):
+        return df.select("asset_id").distinct()
+
+    # append: new rows on A (existing), E (new key); B, C untouched
+    old = spark.createDataFrame(
+        [("A", 1, 1), ("A", 3, 2), ("B", 2, 1), ("C", 4, 2), ("C", 5, 3)], schema
+    )
+    new = spark.createDataFrame([("A", 7, 4), ("E", 8, 4), ("E", 9, 5)], schema)
+    log = old.unionByName(new)
+    assert _canon(_rechain(chain(old), log, affected(new))) == _canon(chain(log))
+    assert _canon(_rechain(None, log, affected(new))) == _canon(chain(log))
+
+    # rollback to block 2: K1 loses every row, K2 only its tail, K3 untouched
+    log = spark.createDataFrame(
+        [("K1", 10, 3), ("K1", 11, 4), ("K2", 1, 1), ("K2", 5, 3),
+         ("K3", 2, 1), ("K3", 3, 2)],
+        schema,
+    )
+    boundary = 2
+    survivors = log.filter(F.col("block_uid") <= boundary)
+    deleted = log.filter(F.col("block_uid") > boundary)
+    got = _rechain(chain(log), survivors, affected(deleted))
+    assert _canon(got) == _canon(chain(survivors))
+    by_key = {(r["asset_id"], r["uid"]): r["superseded_by"] for r in got.collect()}
+    assert by_key == {("K2", 1): MAX_UID, ("K3", 2): 3, ("K3", 3): MAX_UID}
+
+
+def test_micro_batch_confs_restored(spark, tmp_path):
+    """process_batch runs under the micro-batch confs and hands the session
+    its own values back — after a commit, after a failure mid-staging, and
+    after a failure before the batch is even cached."""
+    from blockchain_postgres_sync_spark.streaming.pipeline import _MICRO_BATCH_CONFS
+
+    session = {
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.adaptive.coalescePartitions.minPartitionNum": "3",
+        "spark.sql.adaptive.enabled": "true",
+    }
+    assert session.keys() == _MICRO_BATCH_CONFS.keys()
+    saved = {k: spark.conf.get(k, None) for k in session}
+
+    def current():
+        return {k: spark.conf.get(k, None) for k in session}
+
+    seen = []
+    calls = {"n": 0}
+    orig_stage = TableStore.stage
+
+    def spying_stage(self, name, df, partition_by=None):
+        seen.append(current())
+        calls["n"] += 1
+        if calls["n"] > 3 and calls.get("explode"):
+            raise RuntimeError("chaos: killed mid-batch")
+        return orig_stage(self, name, df, partition_by)
+
+    class _Unpersistable:
+        def persist(self):
+            raise RuntimeError("chaos: no cache")
+
+    rows = wf.scenario_log()
+    root = str(tmp_path / "confs")
+    for k, v in session.items():
+        spark.conf.set(k, v)
+    TableStore.stage = spying_stage
+    try:
+        process_batch(TableStore(spark, root), _mk_updates(spark, rows[:2]),
+                      wf.ASSET_STORAGE)
+        assert current() == session
+        assert seen and all(s == _MICRO_BATCH_CONFS for s in seen)
+
+        # ``failed`` keeps each traceback (and so process_batch's frame)
+        # alive: the confs must be restored by the time the exception
+        # leaves process_batch, not when its frame is collected
+        calls.update(n=0, explode=True)
+        with pytest.raises(RuntimeError, match="chaos") as failed:
+            process_batch(TableStore(spark, root), _mk_updates(spark, rows[2:]),
+                          wf.ASSET_STORAGE)
+        assert calls["n"] > 3
+        assert current() == session
+
+        with pytest.raises(RuntimeError, match="chaos") as failed:
+            process_batch(TableStore(spark, root), _Unpersistable())
+        assert current() == session
+        del failed
+    finally:
+        TableStore.stage = orig_stage
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -317,7 +317,7 @@ def test_cascade_tail_matches_full_recompute(spark, data):
         "price", F.col("price").cast("decimal(18,2)")
     )
     minute_all = minute_candles(df)
-    starts = _interval_starts(spark, wm)
+    starts = _interval_starts(wm)
     floor = min(starts.values())
     tail = cascade_tail_exact_onepass(
         minute_all.filter(F.col("time_start") >= F.lit(floor).cast("timestamp")),

@@ -5,7 +5,8 @@ Synthesizes the SAME event feed as bench.stream_throughput (10k events,
 wrapped (monkeypatched) around the pipeline's driver-visible sections:
 
 - TableStore.stage / stage_range_replace (per table name)
-- apply_appends / normalize_squash / recompute_candles / process_batch
+- apply_appends / _apply_squash_fast (the squash, incl. its
+  normalize_squash fallback) / recompute_candles / process_batch
 - store.commit
 
 Prints one line per section occurrence and a per-section total at the end.
@@ -67,7 +68,7 @@ def main() -> None:
     )
     TableStore.commit = timed("commit", TableStore.commit)
     P.apply_appends = timed("apply_appends", P.apply_appends)
-    P.normalize_squash = timed("normalize_squash", P.normalize_squash)
+    P._apply_squash_fast = timed("squash", P._apply_squash_fast)
     P.recompute_candles = timed("recompute_candles", P.recompute_candles)
     orig_pb = P.process_batch
 
